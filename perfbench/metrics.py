@@ -21,10 +21,15 @@ WORKLOADS = {
 }
 
 # name -> (unit, better, bound)
+# op_cpu_ms is the median CPU time of one operation, summed over the driver,
+# the JVM and the Python workers. It stands in for wall-clock latency, which
+# the summary line prints beside the CPU stolen by other tenants of the host:
+# on a 4-vCPU VM of a shared host, other tenants took 0-23% of the CPU, wall
+# latency rose up to 2x with it, and ten runs spread by 0.29 of their median
+# in wall latency but 0.10-0.11 in CPU time, which stolen CPU is not charged to.
 END_TO_END = {
     "setup_s": ("s", "lower", 0.25),
-    "rows_per_s": ("1/s", "higher", 0.25),
-    "op_p50_ms": ("ms", "lower", 0.25),
+    "op_cpu_ms": ("ms", "lower", 0.25),
     "result_recall": ("ratio", "higher", 0.25),
     "peak_rss_mb": ("MB", "lower", 0.1),
 }
@@ -35,28 +40,28 @@ ALL = tuple(WORKLOADS)
 
 # name -> (unit, better, layer, moves, on workloads)
 PER_LAYER = {
-    "jobs.run_s": ("s", "lower", "jobs", "rows_per_s", SNAP),
-    "jobs.count_s": ("s", "lower", "jobs", "rows_per_s", SNAP),
-    "jobs.spark_jobs": ("count", "lower", "jobs", "rows_per_s", SNAP),
-    "jobs.source_scans": ("count", "lower", "jobs", "rows_per_s", SNAP),
-    "jobs.exchanges": ("count", "lower", "jobs", "rows_per_s", SNAP),
-    "jobs.shuffle_write_bytes": ("bytes", "lower", "jobs", "rows_per_s", SNAP),
-    "operators.snapshot.build_ms": ("ms", "lower", "operators.snapshot", "rows_per_s", SNAP),
-    "sinks.write_s": ("s", "lower", "sinks.idempotent", "rows_per_s", SNAP),
-    "sinks.task_s": ("s", "lower", "sinks.idempotent", "rows_per_s", SNAP),
-    "sinks.tasks": ("count", "lower", "sinks.idempotent", "rows_per_s", SNAP),
-    "sinks.failed_tasks": ("count", "lower", "sinks.idempotent", "rows_per_s", SNAP),
-    "sinks.batches": ("count", "lower", "sinks.idempotent", "rows_per_s", SNAP),
-    "sinks.rows_attempted": ("count", "lower", "sinks.idempotent", "rows_per_s", SNAP),
-    "sinks.insert_ratio": ("ratio", "higher", "sinks.idempotent", "rows_per_s", SNAP),
-    "sinks.control_s": ("s", "lower", "sinks.control", "rows_per_s", SNAP),
-    "sources.parquet.input_bytes": ("bytes", "lower", "sources.parquet", "rows_per_s", ALL),
-    "sources.parquet.input_records": ("count", "lower", "sources.parquet", "rows_per_s", ALL),
-    "sources.pydatasource.read_s": ("s", "lower", "sources.pydatasource", "rows_per_s", RESUME),
-    "sources.pydatasource.rows": ("count", "lower", "sources.pydatasource", "rows_per_s", RESUME),
-    "reconcile.missing_keys_s": ("s", "lower", "operators.reconcile", "rows_per_s", RESUME),
-    "reconcile.count_s": ("s", "lower", "operators.reconcile", "rows_per_s", RESUME),
-    "reconcile.shuffle_write_bytes": ("bytes", "lower", "operators.reconcile", "rows_per_s", RESUME),
+    "jobs.run_s": ("s", "lower", "jobs", "op_cpu_ms", SNAP),
+    "jobs.count_s": ("s", "lower", "jobs", "op_cpu_ms", SNAP),
+    "jobs.spark_jobs": ("count", "lower", "jobs", "op_cpu_ms", SNAP),
+    "jobs.source_scans": ("count", "lower", "jobs", "op_cpu_ms", SNAP),
+    "jobs.exchanges": ("count", "lower", "jobs", "op_cpu_ms", SNAP),
+    "jobs.shuffle_write_bytes": ("bytes", "lower", "jobs", "op_cpu_ms", SNAP),
+    "operators.snapshot.build_ms": ("ms", "lower", "operators.snapshot", "op_cpu_ms", SNAP),
+    "sinks.write_s": ("s", "lower", "sinks.idempotent", "op_cpu_ms", SNAP),
+    "sinks.task_s": ("s", "lower", "sinks.idempotent", "op_cpu_ms", SNAP),
+    "sinks.tasks": ("count", "lower", "sinks.idempotent", "op_cpu_ms", SNAP),
+    "sinks.failed_tasks": ("count", "lower", "sinks.idempotent", "op_cpu_ms", SNAP),
+    "sinks.batches": ("count", "lower", "sinks.idempotent", "op_cpu_ms", SNAP),
+    "sinks.rows_attempted": ("count", "lower", "sinks.idempotent", "op_cpu_ms", SNAP),
+    "sinks.insert_ratio": ("ratio", "higher", "sinks.idempotent", "op_cpu_ms", SNAP),
+    "sinks.control_s": ("s", "lower", "sinks.control", "op_cpu_ms", SNAP),
+    "sources.parquet.input_bytes": ("bytes", "lower", "sources.parquet", "op_cpu_ms", ALL),
+    "sources.parquet.input_records": ("count", "lower", "sources.parquet", "op_cpu_ms", ALL),
+    "sources.pydatasource.read_s": ("s", "lower", "sources.pydatasource", "op_cpu_ms", RESUME),
+    "sources.pydatasource.rows": ("count", "lower", "sources.pydatasource", "op_cpu_ms", RESUME),
+    "reconcile.missing_keys_s": ("s", "lower", "operators.reconcile", "op_cpu_ms", RESUME),
+    "reconcile.count_s": ("s", "lower", "operators.reconcile", "op_cpu_ms", RESUME),
+    "reconcile.shuffle_write_bytes": ("bytes", "lower", "operators.reconcile", "op_cpu_ms", RESUME),
     "dedup.lsh_s": ("s", "lower", "operators.dedup", "setup_s", DEDUP),
     "dedup.candidate_pairs": ("count", "lower", "operators.dedup", "setup_s", DEDUP),
     "dedup.candidate_precision": ("ratio", "higher", "operators.dedup", "setup_s", DEDUP),
@@ -67,21 +72,22 @@ PER_LAYER = {
     "components.shuffle_write_bytes": ("bytes", "lower", "operators.components", "setup_s", DEDUP),
     "components.keep_s": ("s", "lower", "operators.components", "setup_s", DEDUP),
     "inverted_index.build_s": ("s", "lower", "operators.inverted_index", "setup_s", SEARCH),
-    "inverted_index.search_ms": ("ms", "lower", "operators.inverted_index", "op_p50_ms", SEARCH),
-    "inverted_index.input_bytes_per_query": ("bytes", "lower", "operators.inverted_index", "op_p50_ms", SEARCH),
+    "inverted_index.search_ms": ("ms", "lower", "operators.inverted_index", "op_cpu_ms", SEARCH),
+    "inverted_index.input_bytes_per_query": ("bytes", "lower", "operators.inverted_index", "op_cpu_ms", SEARCH),
     "ivf_index.build_s": ("s", "lower", "operators.ivf_index", "setup_s", SEARCH),
-    "ivf_index.search_ms": ("ms", "lower", "operators.ivf_index", "op_p50_ms", SEARCH),
+    "ivf_index.search_ms": ("ms", "lower", "operators.ivf_index", "op_cpu_ms", SEARCH),
     "ivf_index.input_bytes_per_query": ("bytes", "lower", "operators.ivf_index", "result_recall", SEARCH),
     "session.start_s": ("s", "lower", "session", "setup_s", ALL),
-    "spark.codegen_compiles": ("count", "lower", "spark", "op_p50_ms", SEARCH),
-    "spark.codegen_ms": ("ms", "lower", "spark", "op_p50_ms", SEARCH),
-    "spark.jobs": ("count", "lower", "spark", "rows_per_s", ALL),
-    "spark.tasks": ("count", "lower", "spark", "rows_per_s", ALL),
-    "spark.executor_run_s": ("s", "lower", "spark", "rows_per_s", ALL),
+    "pyspark.py4j_calls": ("count", "lower", "pyspark driver-JVM bridge", "op_cpu_ms", ALL),
+    "spark.codegen_compiles": ("count", "lower", "spark", "op_cpu_ms", SEARCH),
+    "spark.codegen_ms": ("ms", "lower", "spark", "op_cpu_ms", SEARCH),
+    "spark.jobs": ("count", "lower", "spark", "op_cpu_ms", ALL),
+    "spark.tasks": ("count", "lower", "spark", "op_cpu_ms", ALL),
+    "spark.executor_run_s": ("s", "lower", "spark", "op_cpu_ms", ALL),
     "spark.gc_s": ("s", "lower", "spark", "peak_rss_mb", ALL),
     "spark.spill_bytes": ("bytes", "lower", "spark", "peak_rss_mb", ALL),
-    "spark.shuffle_write_bytes": ("bytes", "lower", "spark", "rows_per_s", ALL),
-    "trace.overhead_ms": ("ms", "lower", "benchmark tracer", "op_p50_ms", ALL),
+    "spark.shuffle_write_bytes": ("bytes", "lower", "spark", "op_cpu_ms", ALL),
+    "trace.overhead_ms": ("ms", "lower", "benchmark tracer", "op_cpu_ms", ALL),
 }
 
 
@@ -103,4 +109,4 @@ def benchmark_json() -> dict:
     }
 
 
-RUN_SECONDS = 6
+RUN_SECONDS = 8

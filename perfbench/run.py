@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload snapshot_resume --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload snapshot_resume --seed 1 --seconds 8 --trace 0
 
 Run from the repository root. Prints a one-line human summary, then, as
 the last line, one JSON object: {"correct", "attempted", "failed",
@@ -22,7 +22,14 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _pin_environment(workdir: str) -> None:
+# Engine cores per workload: the sink's partitions write in parallel, so a
+# second core shortens a resume cycle by a fifth; curation and search
+# requests are chains of small single-task jobs that a second core did not
+# shorten.
+ENGINE_CORES = {"snapshot_resume": 2, "curate_serve": 1}
+
+
+def _pin_environment(workdir: str, cores: int) -> None:
     """Keep every file the run makes inside the checkout and pin the engine
     to the host. Must run before pyspark starts its JVM."""
     tmp = os.path.join(workdir, "tmp")
@@ -34,9 +41,9 @@ def _pin_environment(workdir: str) -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
-    # Two cores, not all: with every vCPU busy, CPU stolen by other tenants
+    # Few cores, not all: with every vCPU busy, CPU stolen by other tenants
     # of a shared host slowed whole runs by up to 1.7x.
-    os.environ["SPARK_GRAFT_CPUS"] = str(min(2, os.cpu_count() or 1))
+    os.environ["SPARK_GRAFT_CPUS"] = str(min(cores, os.cpu_count() or 1))
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     # Every JVM, the launcher's too: temp files in the checkout, no hsperfdata.
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
@@ -163,6 +170,7 @@ def layer_metrics(run, jobs: list[dict], session_start_s: float, index_build: di
         v["spark.spill_bytes"] = everything["memoryBytesSpilled"] + everything["diskBytesSpilled"]
         v["spark.shuffle_write_bytes"] = everything["shuffleWriteBytes"]
         v["spark.codegen_compiles"], v["spark.codegen_ms"] = rec["codegen"]
+        v["pyspark.py4j_calls"] = rec["py4j_calls"]
         for name, value in v.items():
             per_op[name].append(float(value))
 
@@ -198,7 +206,7 @@ def main(argv: list[str] | None = None) -> int:
     base = os.path.join(ROOT, ".perfbench_work")
     workdir = os.path.join(base, f"{args.workload}-{args.seed}-{os.getpid()}")
     os.makedirs(workdir)
-    _pin_environment(workdir)
+    _pin_environment(workdir, ENGINE_CORES[args.workload])
 
     from perfbench import trace, workloads
 
@@ -241,16 +249,18 @@ def main(argv: list[str] | None = None) -> int:
         else:
             values = {
                 "setup_s": run.setup_s,
-                "rows_per_s": result["rows_per_s"],
-                "op_p50_ms": _median([r["latency_s"] for r in run.ops]) * 1000,
+                "op_cpu_ms": _median([r["cpu_s"] for r in run.ops]) * 1000,
                 "result_recall": result["recall"],
                 "peak_rss_mb": rss.peak / 2**20,
             }
             units = {n: u for n, (u, _b, _bd) in metrics.END_TO_END.items()}
             summary = dict(values, error_rate=workloads.error_rate(checked), ops=attempted)
+            # wall-clock latency, with the share of CPU stolen by other tenants
+            summary["op_p50_ms"] = _median([r["latency_s"] for r in run.ops]) * 1000
             summary["op_ms"] = [round(r["latency_s"] * 1000) for r in run.ops]
+            summary["cpu_ms"] = [round(r["cpu_s"] * 1000) for r in run.ops]
             summary["steal"] = [round(r["steal"], 3) for r in run.ops]
-            summary.update((k, v) for k, v in result.items() if k not in ("rows_per_s", "recall"))
+            summary.update((k, v) for k, v in result.items() if k != "recall")
             print("summary " + json.dumps(summary))
         if set(values) != set(units):
             raise RuntimeError(f"metric names drifted from the schema: {sorted(set(values) ^ set(units))}")

@@ -43,6 +43,8 @@ class Tracer:
         self.spans: list[Span] = []
         self._local = threading.local()
         self._patches: list[tuple[object, str, object]] = []
+        self.counts: dict[str, int] = {}
+        self._count_lock = threading.Lock()
 
     @contextlib.contextmanager
     def span(self, name: str, **attrs):
@@ -76,6 +78,20 @@ class Tracer:
                 return original(*args, **kwargs)
 
         setattr(owner, attr, traced)
+        self._patches.append((owner, attr, original))
+
+    def count(self, owner: object, attr: str, name: str) -> None:
+        """Replace owner.attr with a wrapper that adds one to counts[name]
+        per call: for calls made thousands of times per operation, where a
+        span each would cost more than the call."""
+        original = getattr(owner, attr)
+
+        def counted(*args, **kwargs):
+            with self._count_lock:
+                self.counts[name] = self.counts.get(name, 0) + 1
+            return original(*args, **kwargs)
+
+        setattr(owner, attr, counted)
         self._patches.append((owner, attr, original))
 
     def unwrap_all(self) -> None:
@@ -223,11 +239,32 @@ def tree_pss_bytes(root: int) -> int:
     return total
 
 
+def tree_cpu_seconds(root: int) -> float:
+    """CPU time, user and system, of `root` and its descendants (the JVM and
+    its Python workers), reaped children included. Time the hypervisor gave
+    to other tenants is not in it."""
+    kids = _children_map()
+    ticks, todo = 0, [root]
+    while todo:
+        pid = todo.pop()
+        todo.extend(kids.get(pid, []))
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        # utime, stime, cutime, cstime
+        ticks += sum(int(x) for x in fields[11:15])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 class RssSampler:
     """Samples the memory of this process and all its descendants (the JVM
     and its Python workers) together and keeps the maximum."""
 
-    def __init__(self, period: float = 0.2) -> None:
+    # Each sample walks /proc holding the GIL that the driver's py4j calls
+    # also need, so it samples only twice a second.
+    def __init__(self, period: float = 0.5) -> None:
         self.period = period
         self.peak = 0
         self._stop = threading.Event()
