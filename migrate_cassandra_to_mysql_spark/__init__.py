@@ -24,4 +24,8 @@ docstrings identify the *behavior* being re-expressed.
 
 __version__ = "0.1.0"
 
-from migrate_cassandra_to_mysql_spark.session import get_spark  # noqa: F401
+from migrate_cassandra_to_mysql_spark import pyworker
+
+pyworker.install()
+
+from migrate_cassandra_to_mysql_spark.session import get_spark  # noqa: E402,F401

@@ -78,9 +78,11 @@ def run_snapshot(
     if cfg.drop_bucket_col:
         df = df.drop("token_bucket")
 
-    # Progress counters ride the job itself via observe() — the reference's
+    # Progress counters ride a job via observe() — the reference's
     # lock-guarded progress_counter (A7, snapshot_only_python.py:247-249)
-    # without a second pass over the data.
+    # without a lock. That job is the df.count() below, a full pass of its
+    # own: write_idempotent then runs the pipeline a second time. Fusing
+    # count, metrics and write into one job is ROADMAP direction A.
     obs = Observation("snapshot_metrics")
     df = df.observe(
         obs,

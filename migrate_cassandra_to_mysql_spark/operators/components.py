@@ -516,10 +516,12 @@ def personalized_pagerank(
 
     tp = 1.0 / n_seeds
     tp_upd = (1.0 - damping) / n_seeds
+    # The teleport frame keeps the seeds' own id type (string ids too).
     seed_tp = local_frame(
         edges.sparkSession,
-        [(int(r["node"]), tp, tp_upd) for r in seed_rows],
-        "node long, tp double, tp_upd double",
+        [(r["node"], tp, tp_upd) for r in seed_rows],
+        f"node {seeds.schema[0].dataType.simpleString()}, "
+        "tp double, tp_upd double",
     )
     st = seed_tp.select("node", "tp_upd")
     # rank_0 is a |S|-row LOCAL relation — flat lineage by construction,

@@ -112,6 +112,33 @@ def encode_postings(
     )
 
 
+def _write_concurrently(spark: SparkSession, *writes) -> None:
+    """Run independent staging writes on their own threads. The first
+    failure cancels the siblings' running Spark jobs (by a per-call job
+    tag) and is raised once they have stopped, so a failed layer neither
+    lets the others run to completion nor leaves a write racing a retry."""
+    import concurrent.futures as _cf
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"inverted-index-write-{uuid.uuid4().hex}"
+
+    def tagged(write):
+        sc.addJobTag(tag)
+        try:
+            write()
+        finally:
+            sc.removeJobTag(tag)
+
+    with _cf.ThreadPoolExecutor(max_workers=len(writes)) as ex:
+        futures = [ex.submit(tagged, w) for w in writes]
+        done, _ = _cf.wait(futures, return_when=_cf.FIRST_EXCEPTION)
+        for f in futures:
+            if f in done and f.exception() is not None:
+                sc.cancelJobsWithTag(tag)
+                raise f.exception()
+
+
 def build_inverted_index(
     docs: DataFrame,
     index_dir: str,
@@ -141,8 +168,6 @@ def build_inverted_index(
         swap_live_dir,
     )
 
-    import concurrent.futures as _cf
-
     toks = _tokenized(docs, text_col)
     # The two layer writes are independent sinks over independent
     # staging dirs — submit them concurrently so the small doclens job
@@ -150,23 +175,19 @@ def build_inverted_index(
     # threads drive submission only, Spark's scheduler multiplexes —
     # the same pattern merge_sharded_layer/compact_partitioned use).
     # BOTH swaps still happen only after BOTH writes committed.
-    with _cf.ThreadPoolExecutor(max_workers=2) as _ex:
-        fp = _ex.submit(
-            lambda: _postings_from_tokenized(toks, n_buckets)
-            .withColumn("ingest_batch", F.lit(0))
-            .write.mode("overwrite")
-            .partitionBy("bucket", "ingest_batch")
-            .parquet(f"{index_dir}/postings.new")
-        )
-        fd = _ex.submit(
-            lambda: toks.select("doc_id", "dl")
-            .withColumn("ingest_batch", F.lit(0))
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .parquet(f"{index_dir}/doclens.new")
-        )
-        fp.result()
-        fd.result()
+    _write_concurrently(
+        docs.sparkSession,
+        lambda: _postings_from_tokenized(toks, n_buckets)
+        .withColumn("ingest_batch", F.lit(0))
+        .write.mode("overwrite")
+        .partitionBy("bucket", "ingest_batch")
+        .parquet(f"{index_dir}/postings.new"),
+        lambda: toks.select("doc_id", "dl")
+        .withColumn("ingest_batch", F.lit(0))
+        .write.mode("overwrite")
+        .partitionBy("ingest_batch")
+        .parquet(f"{index_dir}/doclens.new"),
+    )
     for part in ("postings", "doclens"):
         swap_live_dir(index_dir, part)
     # lexicon (per-term df) derives from postings; stats (n_docs/sum_dl)
@@ -363,8 +384,6 @@ def _refresh_derived(spark: SparkSession, index_dir: str) -> None:
         swap_live_dir,
     )
 
-    import concurrent.futures as _cf
-
     deletes = _load_deletes(spark, index_dir)
     written = spark.read.parquet(f"{index_dir}/postings")
     doclens = spark.read.parquet(f"{index_dir}/doclens")
@@ -380,25 +399,21 @@ def _refresh_derived(spark: SparkSession, index_dir: str) -> None:
     # staging dirs — concurrent submission (guide §2.6), swaps + the one
     # manifest commit strictly after both complete, so the cross-layer
     # atomicity contract is untouched.
-    with _cf.ThreadPoolExecutor(max_workers=2) as _ex:
-        fl = _ex.submit(
-            lambda: written.groupBy("bucket", "tok")
-            .agg(F.count(F.lit(1)).cast("long").alias("df"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/lexicon.new")
+    _write_concurrently(
+        spark,
+        lambda: written.groupBy("bucket", "tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("df"))
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(f"{index_dir}/lexicon.new"),
+        lambda: doclens.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dl").alias("sum_dl"),
         )
-        fs = _ex.submit(
-            lambda: doclens.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("dl").alias("sum_dl"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/stats.new")
-        )
-        fl.result()
-        fs.result()
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/stats.new"),
+    )
     for part in ("lexicon", "stats"):
         swap_live_dir(index_dir, part)
     commit_live_snapshot(index_dir, _manifest_layers(index_dir))

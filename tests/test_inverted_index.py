@@ -312,6 +312,32 @@ def test_data_layers_are_versioned_from_first_build(spark, index_dir):
         assert os.path.isdir(os.path.realpath(f"{index_dir}/{layer}")), layer
 
 
+def test_failed_postings_write_swaps_neither_layer(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A rebuild whose postings write fails raises that failure and
+    leaves every live layer on its previous version: the doclens write is
+    cancelled, not run to completion, and no swap runs."""
+    docs = T(spark, sf_dir, "documents")
+    d = str(tmp_path / "idx")
+    inverted_index.build_inverted_index(docs, d)
+    live = {layer: os.readlink(f"{d}/{layer}") for layer in inverted_index.LAYERS}
+
+    postings = inverted_index._postings_from_tokenized
+
+    def failing(toks, n_buckets):
+        return postings(toks, n_buckets).where(
+            F.assert_true(F.col("doc_id") < 0, "injected postings failure").isNull()
+        )
+
+    monkeypatch.setattr(inverted_index, "_postings_from_tokenized", failing)
+    with pytest.raises(Exception, match="injected postings failure"):
+        inverted_index.build_inverted_index(docs, d)
+    assert {
+        layer: os.readlink(f"{d}/{layer}") for layer in inverted_index.LAYERS
+    } == live
+
+
 def test_bm25_reads_are_snapshot_consistent_across_layer_swaps(
     spark, sf_dir, tmp_path_factory
 ):

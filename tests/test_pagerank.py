@@ -176,6 +176,28 @@ def test_ppr_matches_python_reference(spark, ring_edges):
         assert abs(got[v] - ref[v]) < 1e-9, v
 
 
+def test_ppr_string_node_ids_match_integer_ids(spark, ring_edges):
+    # the teleport frame takes the seeds' id type: relabelling the same
+    # graph with string ids must give the same ranks, node for node
+    from migrate_cassandra_to_mysql_spark.operators.components import (
+        personalized_pagerank,
+    )
+
+    ints = personalized_pagerank(
+        spark.createDataFrame(ring_edges, "src long, dst long"),
+        spark.createDataFrame([(0,), (3,)], "node long"),
+        n_iter=5,
+    )
+    strs = personalized_pagerank(
+        spark.createDataFrame(
+            [(f"n{a}", f"n{b}") for a, b in ring_edges], "src string, dst string"
+        ),
+        spark.createDataFrame([("n0",), ("n3",)], "node string"),
+        n_iter=5,
+    )
+    assert dict(strs.collect()) == {f"n{v}": r for v, r in ints.collect()}
+
+
 def test_ppr_all_seeds_equals_global_pagerank(spark, ring_edges):
     # teleporting to ALL nodes uniformly IS global pagerank — the
     # recursion coincides term by term, so ranks must be bit-identical
